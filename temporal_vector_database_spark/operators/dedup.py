@@ -30,7 +30,10 @@ twin cross-checked for equality in tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from fractions import Fraction
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -1248,10 +1251,20 @@ def connected_components(
     self-loop property test pins the behavior. Null ids are not
     supported (the pair builders never emit them).
 
+    Both id columns must share one type (``ValueError`` otherwise): ids
+    from either column land in both output columns, so a mixed pair
+    would type one of them wrongly.
+
     Output: (id, comp) — comp is the minimum id reachable from ``id``.
     """
     import warnings
 
+    tp = dict(pairs.dtypes)
+    if tp[a_col] != tp[b_col]:
+        raise ValueError(
+            f"connected_components: {a_col} ({tp[a_col]}) and {b_col}"
+            f" ({tp[b_col]}) must have the same type"
+        )
     # r12: collapse each partition's pair list map-side first (zero
     # shuffle — see _precontract_pairs), then run the contraction loop
     # on the residual ≤ one-edge-per-node structure. Measured at sf0.1
@@ -1822,131 +1835,162 @@ def _bucket_containment_fn(min_containment: float, chunk_rows: int):
     return fn
 
 
-def _containment_prefix_pairs(
-    docs: DataFrame, text_col: str, width: int, min_containment: float
-) -> DataFrame:
-    """Exact-recall containment self-join (``band_on="small"`` tier of
-    :func:`ngram_containment_pairs` — see its docstring for the prefix
-    theorem). Small side emits its ``n − ceil(t·n) + 1`` rarest hashed
-    shingles; the container side posts ALL shingles; the smaller-set
-    side of each candidate pair is forced onto the prefix side by the
-    join condition, so every pair passing the integer verify gate is
-    found. Same row-local set build + candidate-pruned verify
-    discipline as ``jaccard_prefix_join``."""
-    from fractions import Fraction
+# ---------------------------------------------------------------------------
+# Exact-recall set-similarity joins: one filter-verify pipeline
+# ---------------------------------------------------------------------------
+# The four PPJoin-family joins (`jaccard_prefix_join`,
+# `cross_corpus_jaccard_exact`, `ngram_containment_pairs(band_on="small")`,
+# `containment_decontaminate`) compose these stages: exact threshold →
+# row-local set build → rare-first prefix → candidate equi-join (the one
+# piece each shape owns) → candidate-pruned integer verify → best match
+# per corpus doc (cross-corpus shapes). Set tables are ``(id, set, n)``
+# frames in that column order; the stages address their columns by
+# position, so each caller names them for its shape.
 
-    from pyspark.sql import Window
 
-    frac = Fraction(str(float(min_containment)))
-    tn, td = frac.numerator, frac.denominator
-    if not (0 < tn <= td):
-        raise ValueError(f"min_containment must be in (0, 1], got {min_containment}")
-    if td > 10_000:
-        # exact integer math: keep tn·n_sh far from BIGINT range. A
-        # threshold like 1/3 should be passed as a short decimal (0.333).
+def _exact_threshold(t, name: str) -> tuple[int, int]:
+    """Threshold stage: ``t`` — a float, read through its shortest decimal
+    repr (``0.6`` → 3/5), or an integer pair ``(num, den)`` — as the
+    reduced exact rational ``(tn, td)``, checked for ``0 < t <= 1`` and
+    ``td <= 10⁴``. Every later comparison is pure integer arithmetic, so
+    recall never hinges on float rounding; the denominator bound keeps
+    ``tn·n`` far from BIGINT range (pass 1/3 as the short decimal 0.333)."""
+    if isinstance(t, tuple):
+        num, den = int(t[0]), int(t[1])
+    else:
+        num, den = Fraction(str(float(t))), 1
+    frac = Fraction(num, den) if den > 0 else Fraction(0)
+    if not 0 < frac <= 1:
+        raise ValueError(f"{name} must be in (0, 1], got {t}")
+    if frac.denominator > 10_000:
         raise ValueError(
-            f"min_containment must be a short decimal (denominator <= 1e4), got {frac}"
+            f"{name} must be a short decimal (denominator <= 1e4), got {frac}"
         )
-    shingle_arr = (
+    return frac.numerator, frac.denominator
+
+
+def _shingle_set(text_col: str, width: int) -> Column:
+    """Distinct 32-bit hashes (`_hash32_from_digest_expr`) of the
+    character ``width``-shingles, built ROW-LOCALLY: one ``md5`` per
+    shingle, hashed and de-duplicated inside one projection — no
+    explode, no distinct shuffle, no ``collect_set`` (the same set as
+    distinct-shingles → hash → collect_set: both dedupe at the hash32
+    grain)."""
+    digs = (
         f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-        f" i -> substring({text_col}, i, {width}))"
+        f" i -> md5(substring({text_col}, i, {width})))"
     )
-    set_expr = (
-        f"array_distinct(transform({shingle_arr},"
-        f" s -> CAST({_token_hash32_expr('s')} AS BIGINT)))"
+    return F.expr(
+        f"array_distinct(transform({digs},"
+        f" d -> CAST({_hash32_from_digest_expr('d')} AS BIGINT)))"
     )
-    sets = (
-        _spread(docs.select("doc_id", text_col))
-        .select(F.col("doc_id").alias("_id"), F.expr(set_expr).alias("sh_set"))
-        .withColumn("n_sh", F.size("sh_set").cast("long"))
-        .localCheckpoint()
+
+
+def _shingle_sets(
+    docs: DataFrame, text_col: str, width: int, id_col: str = "doc_id"
+) -> DataFrame:
+    """Set-build stage: ``(_id, sh_set, n_sh)`` per document."""
+    return docs.select(
+        F.col(id_col).alias("_id"), _shingle_set(text_col, width).alias("sh_set")
+    ).withColumn("n_sh", F.size("sh_set").cast("long"))
+
+
+def _tokens(sets: DataFrame) -> DataFrame:
+    """Posting stream ``(id, n, tok)`` of a set table."""
+    i, s, n = sets.columns
+    return sets.select(i, n, F.explode(s).alias("tok"))
+
+
+def _doc_freq(tok: DataFrame) -> DataFrame:
+    return tok.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
+
+
+def _prefix_len(n: str, tn: int, td: int) -> Column:
+    """``n − ceil(t·n) + 1`` in exact integers: a doc whose overlap with
+    another must reach ``ceil(t·n)`` shares one of its first this-many
+    tokens with it, under ANY global token order (the prefix theorem)."""
+    return F.col(n) - F.expr(f"({tn} * {n} + {td} - 1) div {td}") + F.lit(1)
+
+
+def _rare_prefix(
+    ranked: DataFrame, id_col: str, n_col: str, tn: int, td: int
+) -> DataFrame:
+    """Prefix stage: each doc's `_prefix_len` rarest tokens under the
+    global order ``(df, tok)`` — one doc-keyed window. ``ranked`` is a
+    posting stream with its ``df`` column joined on. Cost concentrates
+    on rare tokens (short posting lists): the frequent-token quadratic
+    blowup of a naive token join is exactly what the order prunes."""
+    w = Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("tok"))
+    return (
+        ranked.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= _prefix_len(n_col, tn, td))
+        .select("tok", id_col, n_col)
     )
-    tok = sets.select("_id", "n_sh", F.explode("sh_set").alias("tok"))
-    freq = tok.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
-    w = Window.partitionBy("_id").orderBy(F.asc("df"), F.asc("tok"))
-    prefix_len = (
-        F.col("n_sh") - F.expr(f"({tn} * n_sh + {td} - 1) div {td}") + F.lit(1)
+
+
+def _members(sets: DataFrame, pairs: DataFrame, *id_cols: str) -> DataFrame:
+    """``sets`` pruned to the docs named in ``pairs``' ``id_cols``: at
+    corpus scale only docs that survived the prefix filter carry their
+    sets into the verify join. The stage adds no broadcast hint: in
+    adversarial self-join corpora the id list approaches one row per
+    document, so forcing a broadcast is an unbounded OOM risk at the
+    100 TB posture (ADVICE r07); AQE picks a broadcast at runtime when
+    the list is actually small. A caller whose pair list is bounded
+    passes ``F.broadcast(pairs)`` (the hint rides up to the semi-join)."""
+    key = sets.columns[0]
+    ids = reduce(
+        DataFrame.unionByName, [pairs.select(F.col(c).alias(key)) for c in id_cols]
     )
-    prefix = (
-        tok.join(freq, "tok")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= prefix_len)
-        .select("tok", "_id", "n_sh")
-        .localCheckpoint()
-    )
-    # prefix side = the smaller set of the pair (ties by id) — exactly
-    # the side the prefix theorem bounds; the container side is the
-    # full posting stream, never prefix-pruned
-    cand = (
-        prefix.alias("pa")
-        .join(
-            tok.alias("pb"),
-            (F.col("pa.tok") == F.col("pb.tok"))
-            & (
-                (F.col("pa.n_sh") < F.col("pb.n_sh"))
-                | (
-                    (F.col("pa.n_sh") == F.col("pb.n_sh"))
-                    & (F.col("pa._id") < F.col("pb._id"))
-                )
-            ),
-        )
+    return sets.join(ids.distinct(), key, "left_semi")
+
+
+def _verify(pairs: DataFrame, gate: Column, **sides: DataFrame) -> DataFrame:
+    """Verify stage: join each candidate pair to the two sides' set
+    tables — the keyword is the side's tag, so ``a=sets`` joins
+    ``(a_id, a_set, n_a)`` on ``a_id`` — count the exact intersection
+    ``n_inter`` (``array_intersect`` in codegen) and keep the pairs that
+    pass the integer ``gate``."""
+    for tag, sets in sides.items():
+        tagged = sets.toDF(f"{tag}_id", f"{tag}_set", f"n_{tag}")
+        pairs = pairs.join(tagged, f"{tag}_id")
+    a, b = sides
+    return pairs.withColumn(
+        "n_inter", F.size(F.array_intersect(f"{a}_set", f"{b}_set")).cast("long")
+    ).where(gate)
+
+
+def _gate(tn: int, td: int, bound: Column) -> Column:
+    """``n_inter >= (tn/td)·bound`` in exact integers."""
+    return F.col("n_inter") * F.lit(td) >= F.lit(tn) * bound
+
+
+def _jaccard_gate(tn: int, td: int, n_a: str, n_b: str) -> Column:
+    """``J >= tn/td`` ⟺ ``n_inter >= tn/(tn+td)·(n_a + n_b)``: the gate
+    names ``n_inter`` once — it is pushed into the verify join's
+    condition, where each reference re-runs ``array_intersect``."""
+    return _gate(tn, tn + td, F.col(n_a) + F.col(n_b))
+
+
+def _jaccard(n_a: str, n_b: str) -> Column:
+    union = F.col(n_a) + F.col(n_b) - F.col("n_inter")
+    return F.col("n_inter").cast("double") / union.cast("double")
+
+
+def _ratio(n: str) -> Column:
+    return F.col("n_inter").cast("double") / F.col(n).cast("double")
+
+
+def _best_match(scored: DataFrame, score: str, *cols) -> DataFrame:
+    """Best-match stage: one row per corpus doc ``c_id`` with its best
+    eval doc (max ``score``, ties → lower ``e_id``), as ``(doc_id,
+    eval_doc_id, *cols)``."""
+    w = Window.partitionBy("c_id").orderBy(F.desc(score), F.asc("e_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
         .select(
-            F.least(F.col("pa._id"), F.col("pb._id")).alias("a_id"),
-            F.greatest(F.col("pa._id"), F.col("pb._id")).alias("b_id"),
+            F.col("c_id").alias("doc_id"), F.col("e_id").alias("eval_doc_id"), *cols
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    # r13: same single-partition verify fix as jaccard_prefix_join —
-    # the checkpointed id-only pair list AQE-coalesces to ~1 partition
-    # and the per-pair intersect verify serializes; no-op at scale.
-    # Verify-side reference only (see jaccard_prefix_join).
-    cand_v = _spread(cand)
-    cand_ids = (
-        cand.select(F.col("a_id").alias("_id"))
-        .unionByName(cand.select(F.col("b_id").alias("_id")))
-        .distinct()
-    )
-    # No broadcast hint on cand_ids: in adversarial corpora it
-    # approaches one row per document, so forcing a broadcast is an
-    # unbounded driver/executor OOM risk at the documented 100 TB
-    # posture (ADVICE r07). AQE picks a broadcast at runtime when the
-    # candidate set is actually small; the semi-join is correct either
-    # way.
-    vsets = sets.join(cand_ids, "_id", "left_semi")
-    sa = vsets.select(
-        F.col("_id").alias("a_id"),
-        F.col("sh_set").alias("a_set"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sb = vsets.select(
-        F.col("_id").alias("b_id"),
-        F.col("sh_set").alias("b_set"),
-        F.col("n_sh").alias("n_b"),
-    )
-    scored = (
-        cand_v.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("a_set", "b_set")).cast("long")
-        )
-        .where(
-            F.col("n_inter") * F.lit(td)
-            >= F.lit(tn) * F.least(F.col("n_a"), F.col("n_b"))
-        )
-    )
-    return scored.select(
-        "a_id",
-        "b_id",
-        "n_inter",
-        "n_a",
-        "n_b",
-        (F.col("n_inter").cast("double") / F.col("n_a").cast("double")).alias(
-            "containment_a"
-        ),
-        (F.col("n_inter").cast("double") / F.col("n_b").cast("double")).alias(
-            "containment_b"
-        ),
     )
 
 
@@ -1989,20 +2033,50 @@ def ngram_containment_pairs(
     equi-join of every doc's rarest-prefix against every doc's FULL
     postings is recall-COMPLETE for the either-direction predicate
     (the container side cannot be prefix-pruned: containment puts no
-    lower bound on |∩|/|B|). The threshold is handled as the exact
-    rational ``Fraction(str(min_containment))`` and the verify gate is
-    pure integers (``n_inter·den >= num·least(n_a, n_b)``), so recall
-    is provable, not float-dependent — the driver gate for this mode
-    is a brute-force ALL-PAIRS oracle, which only passes because the
-    plan misses nothing. Cost concentrates on rare tokens (short
-    posting lists); at 100 TB the frequent-shingle postings are the
-    pressure point — cap or segment hot shingles there, which trades
-    back recall only on pairs whose every prefix shingle is hot.
+    lower bound on |∩|/|B|). The threshold is the exact rational of
+    `_exact_threshold` and the verify gate is pure integers
+    (``n_inter·den >= num·least(n_a, n_b)``), so recall is provable,
+    not float-dependent — the driver gate for this mode is a
+    brute-force ALL-PAIRS oracle, which only passes because the plan
+    misses nothing. Cost concentrates on rare tokens (short posting
+    lists); at 100 TB the frequent-shingle postings are the pressure
+    point — cap or segment hot shingles there, which trades back
+    recall only on pairs whose every prefix shingle is hot.
     """
     if band_on not in ("sig", "small"):
         raise ValueError(f"band_on must be 'sig' or 'small', got {band_on!r}")
     if band_on == "small":
-        return _containment_prefix_pairs(docs, text_col, width, min_containment)
+        tn, td = _exact_threshold(min_containment, "min_containment")
+        sets = _shingle_sets(
+            _spread(docs.select("doc_id", text_col)), text_col, width
+        ).localCheckpoint()
+        tok = _tokens(sets)
+        prefix = _rare_prefix(
+            tok.join(_doc_freq(tok), "tok"), "_id", "n_sh", tn, td
+        ).localCheckpoint()
+        # prefix side = the smaller set of the pair (ties by id) — exactly
+        # the side the prefix theorem bounds; the container side is the
+        # full posting stream, never prefix-pruned
+        ia, ib = F.col("pa._id"), F.col("pb._id")
+        na, nb = F.col("pa.n_sh"), F.col("pb.n_sh")
+        cand = (
+            prefix.alias("pa")
+            .join(
+                tok.alias("pb"),
+                (F.col("pa.tok") == F.col("pb.tok"))
+                & ((na < nb) | ((na == nb) & (ia < ib))),
+            )
+            .select(F.least(ia, ib).alias("a_id"), F.greatest(ia, ib).alias("b_id"))
+            .distinct()
+            .localCheckpoint()
+        )
+        # verify-side spread: see jaccard_prefix_join
+        v = _members(sets, cand, "a_id", "b_id")
+        scored = _verify(_spread(cand), _gate(tn, td, F.least("n_a", "n_b")), a=v, b=v)
+        return scored.select(
+            "a_id", "b_id", "n_inter", "n_a", "n_b",
+            _ratio("n_a").alias("containment_a"), _ratio("n_b").alias("containment_b"),
+        )
     rows_per_band = num_hashes // bands
 
     def band_exprs():
@@ -2142,8 +2216,6 @@ def cross_corpus_near_dup(
     aggregate), so the set-build subtree carries ZERO exchanges
     (plan-pinned in ``tests/test_plans.py``).
     """
-    from pyspark.sql import Window
-
     rows_per_band = num_hashes // bands
 
     def band_exprs():
@@ -2165,28 +2237,8 @@ def cross_corpus_near_dup(
             ).alias("band_id", "band_hash"),
         )
 
-    def side_sets(docs: DataFrame, tag: str) -> DataFrame:
-        # row-local set build: shingle digests, 32-bit hashes, and the
-        # distinct-set all inside one projection — no explode, no
-        # distinct shuffle, no collect_set aggregate (the hash32 set
-        # equals the old distinct-shingles→hash→collect_set: both
-        # dedupe at the hash32 grain).
-        digs = (
-            f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-            f" i -> md5(substring({text_col}, i, {width})))"
-        )
-        set_expr = (
-            f"array_distinct(transform({digs},"
-            f" d -> CAST({_hash32_from_digest_expr('d')} AS BIGINT)))"
-        )
-        return docs.select(
-            F.col("doc_id").alias(f"{tag}_id"),
-            F.expr(set_expr).alias(f"{tag}_set"),
-        ).withColumn(f"n_{tag}", F.size(f"{tag}_set").cast("long"))
-
     cb = side_bucket(corpus, "c")
     eb = side_bucket(eval_docs, "e")
-    es = side_sets(eval_docs, "e")
     # candidate pairs are small (docs sharing a band with a benchmark
     # doc); localCheckpoint so the band join runs once, feeding both the
     # candidate-id prune and the final score join
@@ -2200,31 +2252,13 @@ def cross_corpus_near_dup(
     # _spread: a single-file fixture reads as 1 partition — the row-local
     # set build would otherwise run on one core (at 100 TB the scan is
     # already parallel and this is a no-op)
-    cs = side_sets(
-        _spread(corpus.join(F.broadcast(cand_ids), "doc_id", "left_semi")), "c"
-    )
-    scored = (
-        pairs.join(cs, "c_id")
-        .join(F.broadcast(es), "e_id")
-        .withColumn("n_inter", F.size(F.array_intersect("c_set", "e_set")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_c") + F.col("n_e") - F.col("n_inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= float(min_jaccard))
-    )
-    w = Window.partitionBy("c_id").orderBy(F.desc("jaccard"), F.asc("e_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("c_id").alias("doc_id"),
-            F.col("e_id").alias("eval_doc_id"),
-            "n_inter",
-            "jaccard",
-        )
-    )
+    cand_docs = corpus.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+    cs = _shingle_sets(_spread(cand_docs), text_col, width)
+    es = _shingle_sets(eval_docs, text_col, width)
+    scored = _verify(
+        pairs, _jaccard("n_c", "n_e") >= float(min_jaccard), c=cs, e=F.broadcast(es)
+    ).withColumn("jaccard", _jaccard("n_c", "n_e"))
+    return _best_match(scored, "jaccard", "n_inter", "jaccard")
 
 
 def cross_corpus_jaccard_exact(
@@ -2268,70 +2302,30 @@ def cross_corpus_jaccard_exact(
     (``doc_id, eval_doc_id, n_inter, jaccard``), best match per
     corpus doc (max jaccard, ties → lower eval id).
     """
-    from fractions import Fraction
-
-    from pyspark.sql import Window
-
-    frac = Fraction(str(float(min_jaccard)))
-    tn, td = frac.numerator, frac.denominator
-    if not (0 < tn <= td):
-        raise ValueError(f"min_jaccard must be in (0, 1], got {min_jaccard}")
-    if td > 10_000:
-        raise ValueError(
-            f"min_jaccard must be a short decimal (denominator <= 1e4), got {frac}"
-        )
-    shingle_arr = (
-        f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-        f" i -> substring({text_col}, i, {width}))"
-    )
-    set_expr = (
-        f"array_distinct(transform({shingle_arr},"
-        f" s -> CAST({_token_hash32_expr('s')} AS BIGINT)))"
-    )
+    tn, td = _exact_threshold(min_jaccard, "min_jaccard")
     esets = (
-        eval_docs.select("doc_id", text_col)
-        .select(F.col("doc_id").alias("e_id"), F.expr(set_expr).alias("e_set"))
-        .withColumn("n_e", F.size("e_set").cast("long"))
+        _shingle_sets(eval_docs, text_col, width)
+        .toDF("e_id", "e_set", "n_e")
         .localCheckpoint()
     )
+    etok = _tokens(esets)
     # global order key from the broadcast-sized side only
-    edf = (
-        esets.select(F.explode("e_set").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").cast("long").alias("df"))
-        .localCheckpoint()
-    )
-    prefix_len = lambda n: (  # noqa: E731 — n − ceil(t·n) + 1, exact ints
-        F.col(n) - F.expr(f"({tn} * {n} + {td} - 1) div {td}") + F.lit(1)
-    )
-    we = Window.partitionBy("e_id").orderBy(F.asc("df"), F.asc("tok"))
-    eprefix = (
-        esets.select("e_id", "n_e", F.explode("e_set").alias("tok"))
-        .join(edf, "tok")  # every eval token has df >= 1
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= prefix_len("n_e"))
-        .select("tok", "e_id", "n_e")
-    )
-    csets = (
-        _spread(corpus.select("doc_id", text_col))
-        .select(F.col("doc_id").alias("c_id"), F.expr(set_expr).alias("c_set"))
-        .withColumn("n_c", F.size("c_set").cast("long"))
-        .localCheckpoint()
-    )
+    edf = _doc_freq(etok).localCheckpoint()
+    eprefix = _rare_prefix(etok.join(edf, "tok"), "e_id", "n_e", tn, td)
+    csets = _shingle_sets(
+        _spread(corpus.select("doc_id", text_col)), text_col, width
+    ).toDF("c_id", "c_set", "n_c").localCheckpoint()
     # present-token stream: corpus tokens in the eval domain (broadcast
     # inner join) — df-0 tokens are implicitly counted via n_present
-    present = csets.select(
-        "c_id", "n_c", F.explode("c_set").alias("tok")
-    ).join(F.broadcast(edf), "tok")
+    present = _tokens(csets).join(F.broadcast(edf), "tok")
     wc = Window.partitionBy("c_id").orderBy(F.asc("df"), F.asc("tok"))
-    wcnt = Window.partitionBy("c_id")
     cprefix = (
         present.withColumn("rn", F.row_number().over(wc))
-        .withColumn("n_present", F.count("*").over(wcnt))
+        .withColumn("n_present", F.count("*").over(Window.partitionBy("c_id")))
         # absent tokens (n_c - n_present of them) occupy ranks 1..A
         .where(
-            (F.col("n_c") - F.col("n_present")) + F.col("rn")
-            <= prefix_len("n_c")
+            F.col("n_c") - F.col("n_present") + F.col("rn")
+            <= _prefix_len("n_c", tn, td)
         )
         .select("tok", "c_id", "n_c")
     )
@@ -2352,35 +2346,13 @@ def cross_corpus_jaccard_exact(
     # reps: this verify ends in a c_id-keyed row_number window, so the
     # extra round-robin exchange only adds a shuffle before the keyed
     # one the window pays anyway.
-    cand_c = cand.select("c_id").distinct()
-    vc = csets.join(cand_c, "c_id", "left_semi")
-    scored = (
-        cand.join(vc, "c_id")
-        .join(F.broadcast(esets), "e_id")
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("c_set", "e_set")).cast("long")
-        )
-        .where(
-            F.col("n_inter") * F.lit(td + tn)
-            >= F.lit(tn) * (F.col("n_c") + F.col("n_e"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_c") + F.col("n_e") - F.col("n_inter")).cast("double"),
-        )
-    )
-    wbest = Window.partitionBy("c_id").orderBy(F.desc("jaccard"), F.asc("e_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wbest))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("c_id").alias("doc_id"),
-            F.col("e_id").alias("eval_doc_id"),
-            "n_inter",
-            "jaccard",
-        )
-    )
+    scored = _verify(
+        cand,
+        _jaccard_gate(tn, td, "n_c", "n_e"),
+        c=_members(csets, cand, "c_id"),
+        e=F.broadcast(esets),
+    ).withColumn("jaccard", _jaccard("n_c", "n_e"))
+    return _best_match(scored, "jaccard", "n_inter", "jaccard")
 
 
 def containment_decontaminate(
@@ -2391,13 +2363,14 @@ def containment_decontaminate(
     min_containment: float = 0.8,
 ) -> DataFrame:
     """EXACT-RECALL asymmetric decontamination (r07, the cross-corpus
-    generalization of ``_containment_prefix_pairs``): corpus documents
-    that CONTAIN an eval/benchmark document — ``C(E→D) = |E∩D| / |E| >=
-    t`` — the quote-inclusion contamination mode that resemblance-tuned
-    LSH (``cross_corpus_near_dup``) structurally misses: an eval
-    question pasted into a long web page leaves the page's MinHash
-    signature dominated by its other shingles, so no band ever
-    collides, while the CONTAINMENT of the eval side is ~1.0.
+    generalization of ``ngram_containment_pairs(band_on="small")``):
+    corpus documents that CONTAIN an eval/benchmark document —
+    ``C(E→D) = |E∩D| / |E| >= t`` — the quote-inclusion contamination
+    mode that resemblance-tuned LSH (``cross_corpus_near_dup``)
+    structurally misses: an eval question pasted into a long web page
+    leaves the page's MinHash signature dominated by its other
+    shingles, so no band ever collides, while the CONTAINMENT of the
+    eval side is ~1.0.
 
     Prefix theorem, one-directional: if ``|E∩D| >= ceil(t·|E|)`` then E
     misses at most ``|E| − ceil(t·|E|)`` of its shingles, so one of its
@@ -2410,60 +2383,29 @@ def containment_decontaminate(
     (containment puts no bound on |∩|/|D|); the full corpus inverted
     index is the honest price of exact recall, and it is the index a
     decontamination deployment maintains anyway. Threshold handled as
-    the exact rational ``Fraction(str(min_containment))``; verify is
-    pure integers ``n_inter·den >= num·n_e``.
+    the exact rational of `_exact_threshold`; verify is pure integers
+    ``n_inter·den >= num·n_e``.
 
     Output: one row per contaminated corpus doc with its best-matching
     eval doc (max containment, ties → lower eval id): ``(doc_id,
     eval_doc_id, n_inter, n_eval, containment)``.
     """
-    from fractions import Fraction
-
-    from pyspark.sql import Window
-
-    frac = Fraction(str(float(min_containment)))
-    tn, td = frac.numerator, frac.denominator
-    if not (0 < tn <= td):
-        raise ValueError(f"min_containment must be in (0, 1], got {min_containment}")
-    if td > 10_000:
-        raise ValueError(
-            f"min_containment must be a short decimal (denominator <= 1e4), got {frac}"
-        )
-    shingle_arr = (
-        f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-        f" i -> substring({text_col}, i, {width}))"
-    )
-    set_expr = (
-        f"array_distinct(transform({shingle_arr},"
-        f" s -> CAST({_token_hash32_expr('s')} AS BIGINT)))"
-    )
-    csets = (
-        _spread(corpus.select("doc_id", text_col))
-        .select(F.col("doc_id").alias("c_id"), F.expr(set_expr).alias("c_set"))
-        .localCheckpoint()
-    )
+    tn, td = _exact_threshold(min_containment, "min_containment")
+    csets = _shingle_sets(
+        _spread(corpus.select("doc_id", text_col)), text_col, width
+    ).toDF("c_id", "c_set", "n_c").localCheckpoint()
     esets = (
-        eval_docs.select("doc_id", text_col)
-        .select(F.col("doc_id").alias("e_id"), F.expr(set_expr).alias("e_set"))
-        .withColumn("n_e", F.size("e_set").cast("long"))
+        _shingle_sets(eval_docs, text_col, width)
+        .toDF("e_id", "e_set", "n_e")
         .localCheckpoint()
     )
-    ctok = csets.select("c_id", F.explode("c_set").alias("tok"))
-    cdf = ctok.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
-    etok = esets.select("e_id", "n_e", F.explode("e_set").alias("tok"))
-    w = Window.partitionBy("e_id").orderBy(F.asc("df"), F.asc("tok"))
-    prefix_len = (
-        F.col("n_e") - F.expr(f"({tn} * n_e + {td} - 1) div {td}") + F.lit(1)
-    )
+    ctok = _tokens(csets)
     # rarity join is a LEFT join: an eval shingle the corpus never
     # contains is the rarest possible (df 0) — it sorts first, costs
     # nothing in the posting join, and keeps the prefix bound intact
-    prefix = (
-        etok.join(cdf, "tok", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= prefix_len)
-        .select("tok", "e_id", "n_e")
+    prefix = _rare_prefix(
+        _tokens(esets).join(_doc_freq(ctok), "tok", "left").fillna(0, ["df"]),
+        "e_id", "n_e", tn, td,
     )
     cand = (
         F.broadcast(prefix)
@@ -2475,31 +2417,16 @@ def containment_decontaminate(
     # r13: the jaccard_prefix_join cand spread was A/B'd here and
     # REJECTED (1.92 s → 2.23 s) — same c_id-window tail as
     # cross_corpus_jaccard_exact, so the extra exchange never pays.
-    cand_c = cand.select("c_id").distinct()
-    vc = csets.join(F.broadcast(cand_c), "c_id", "left_semi")
-    scored = (
-        cand.join(vc, "c_id")
-        .join(F.broadcast(esets), "e_id")
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("e_set", "c_set")).cast("long")
-        )
-        .where(F.col("n_inter") * F.lit(td) >= F.lit(tn) * F.col("n_e"))
-        .withColumn(
-            "containment",
-            F.col("n_inter").cast("double") / F.col("n_e").cast("double"),
-        )
-    )
-    wbest = Window.partitionBy("c_id").orderBy(F.desc("containment"), F.asc("e_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wbest))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("c_id").alias("doc_id"),
-            F.col("e_id").alias("eval_doc_id"),
-            "n_inter",
-            F.col("n_e").alias("n_eval"),
-            "containment",
-        )
+    # Candidates are corpus docs holding an eval prefix shingle, so the
+    # id prune is broadcast (no c_id shuffle of the checkpointed sets).
+    scored = _verify(
+        cand,
+        _gate(tn, td, F.col("n_e")),
+        c=_members(csets, F.broadcast(cand), "c_id"),
+        e=F.broadcast(esets),
+    ).withColumn("containment", _ratio("n_e"))
+    return _best_match(
+        scored, "containment", "n_inter", F.col("n_e").alias("n_eval"), "containment"
     )
 
 
@@ -2573,30 +2500,22 @@ def sorted_neighborhood_pairs(
     offsets (a P-row driver collect — the k-row-dimension discipline).
     Candidates are then an EQUI-join on ``rank + d`` (offsets exploded
     1..window), never a range join; verify is the row-local hashed
-    shingle-set intersect with the exact rational threshold and pure
-    integer comparison (the ``jaccard_prefix_join`` discipline).
+    shingle-set intersect (`_shingle_set`) under the exact rational
+    threshold (`_exact_threshold`) and pure integer comparison.
 
     Output: ``(a_id, b_id, rank_dist, n_inter, n_a, n_b, jaccard)``
     for unordered pairs with J >= num/den, ``a_id < b_id``.
     """
-    tn, td = int(min_jaccard_num), int(min_jaccard_den)
-    if not (0 < tn <= td):
-        raise ValueError(f"threshold must satisfy 0 < num <= den, got {tn}/{td}")
+    tn, td = _exact_threshold(
+        (min_jaccard_num, min_jaccard_den), "min_jaccard_num/min_jaccard_den"
+    )
     if int(window) < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    shingle_arr = (
-        f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-        f" i -> substring({text_col}, i, {width}))"
-    )
-    set_expr = (
-        f"array_distinct(transform({shingle_arr},"
-        f" s -> CAST({_token_hash32_expr('s')} AS BIGINT)))"
-    )
     key = F.lower(F.substring(F.col(text_col), 1, int(key_len)))
     base = _spread(docs.select("doc_id", text_col)).select(
         "doc_id",
         key.alias("_key"),
-        F.expr(set_expr).alias("sh_set"),
+        _shingle_set(text_col, width).alias("sh_set"),
     )
     ranked = (
         _global_ranks(base, "_key", "doc_id")
@@ -2627,23 +2546,17 @@ def sorted_neighborhood_pairs(
         .withColumn(
             "n_inter", F.size(F.array_intersect("a_set", "b_set")).cast("long")
         )
-        .where(
-            F.col("n_inter") * F.lit(td)
-            >= F.lit(tn) * (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
+        .where(_jaccard_gate(tn, td, "n_a", "n_b"))
     )
     a, b = F.col("a_id"), F.col("b_id")
     return scored.select(
         F.least(a, b).alias("a_id"),
         F.greatest(a, b).alias("b_id"),
         "rank_dist",
-        F.when(a < b, F.col("n_inter")).otherwise(F.col("n_inter")).alias("n_inter"),
+        "n_inter",
         F.when(a < b, F.col("n_a")).otherwise(F.col("n_b")).alias("n_a"),
         F.when(a < b, F.col("n_b")).otherwise(F.col("n_a")).alias("n_b"),
-        (
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-        ).alias("jaccard"),
+        _jaccard("n_a", "n_b").alias("jaccard"),
     )
 
 
@@ -2671,64 +2584,41 @@ def jaccard_prefix_join(
     (``n_inter·den >= num·(n_a + n_b − n_inter)``) — no float anywhere
     until the published jaccard column.
 
-    Scale: the prefix join's cost concentrates on RARE tokens (short
-    posting lists) by construction — the frequent-token quadratic
-    blowup that kills naive token joins is exactly what the prefix
-    order prunes. Per-doc prefix extraction is one doc-keyed window
-    (rank by global df); the verify intersect runs on row-locally built
-    hashed sets (no explode/collect_set shuffle — the
-    `cross_corpus_near_dup` discipline).
+    Pipeline: the shared filter-verify stages (`_exact_threshold`,
+    `_shingle_sets`, `_rare_prefix`, `_members`, `_verify`) around the
+    one piece this shape owns — a prefix SELF-join under the PPJoin
+    length filter.
 
     Output: one row per unordered pair ``a_id < b_id`` with
     ``(n_inter, n_a, n_b, jaccard)``.
     """
-    tn, td = int(min_jaccard_num), int(min_jaccard_den)
-    if not (0 < tn <= td):
-        raise ValueError(f"threshold must satisfy 0 < num <= den, got {tn}/{td}")
-    digs = (
-        f"transform(sequence(1, greatest(length({text_col}) - {width - 1}, 1)),"
-        f" i -> md5(substring({text_col}, i, {width})))"
-    )
-    set_expr = (
-        f"array_distinct(transform({digs},"
-        f" d -> CAST({_hash32_from_digest_expr('d')} AS BIGINT)))"
+    tn, td = _exact_threshold(
+        (min_jaccard_num, min_jaccard_den), "min_jaccard_num/min_jaccard_den"
     )
     # _spread: a single-file scan is one partition and the md5-per-
     # shingle HOF would run on one core; checkpoint: `sets` feeds the
     # token stream AND both verify sides, `prefix` self-joins — without
     # materialization the set build recomputes per reference
-    sets = (
-        _spread(docs)
-        .select(F.col(id_col).alias("_id"), F.expr(set_expr).alias("sh_set"))
-        .withColumn("n_sh", F.size("sh_set").cast("long"))
-        .localCheckpoint()
-    )
-    tok = sets.select("_id", "n_sh", F.explode("sh_set").alias("tok"))
-    freq = tok.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_id").orderBy(F.asc("df"), F.asc("tok"))
-    prefix_len = F.col("n_sh") - F.expr(f"({tn} * n_sh + {td} - 1) div {td}") + F.lit(1)
-    prefix = (
-        tok.join(freq, "tok")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= prefix_len)
-        .select("tok", "_id", "n_sh")
-        .localCheckpoint()
-    )
+    sets = _shingle_sets(_spread(docs), text_col, width, id_col).localCheckpoint()
+    tok = _tokens(sets)
+    prefix = _rare_prefix(
+        tok.join(_doc_freq(tok), "tok"), "_id", "n_sh", tn, td
+    ).localCheckpoint()
     # length filter (the second PPJoin prune, also exact): J >= t forces
     # t·max(n_a, n_b) <= min(n_a, n_b) — pairs with incompatible set
     # sizes never leave the token join
+    ia, ib = F.col("pa._id"), F.col("pb._id")
+    na, nb = F.col("pa.n_sh"), F.col("pb.n_sh")
     cand = (
         prefix.alias("pa")
         .join(
             prefix.alias("pb"),
             (F.col("pa.tok") == F.col("pb.tok"))
-            & (F.col("pa._id") < F.col("pb._id"))
-            & (F.col("pa.n_sh") * F.lit(tn) <= F.col("pb.n_sh") * F.lit(td))
-            & (F.col("pb.n_sh") * F.lit(tn) <= F.col("pa.n_sh") * F.lit(td)),
+            & (ia < ib)
+            & (na * F.lit(tn) <= nb * F.lit(td))
+            & (nb * F.lit(tn) <= na * F.lit(td)),
         )
-        .select(F.col("pa._id").alias("a_id"), F.col("pb._id").alias("b_id"))
+        .select(ia.alias("a_id"), ib.alias("b_id"))
         .distinct()
         .localCheckpoint()  # feeds the id-prune AND the verify join
     )
@@ -2743,49 +2633,10 @@ def jaccard_prefix_join(
     # keyed exchange anyway, and a lazy repartition replays once per
     # reference (5 round-robin exchanges in the dumped plan before this
     # split).
-    cand_v = _spread(cand)
-    # verify sides pruned to candidate members (the cross_corpus_near_dup
-    # discipline: at corpus scale only docs that survived the prefix
-    # filter carry their sets into the verify join)
-    cand_ids = (
-        cand.select(F.col("a_id").alias("_id"))
-        .unionByName(cand.select(F.col("b_id").alias("_id")))
-        .distinct()
-    )
-    # No broadcast hint on cand_ids: in adversarial corpora it
-    # approaches one row per document, so forcing a broadcast is an
-    # unbounded driver/executor OOM risk at the documented 100 TB
-    # posture (ADVICE r07). AQE picks a broadcast at runtime when the
-    # candidate set is actually small; the semi-join is correct either
-    # way.
-    vsets = sets.join(cand_ids, "_id", "left_semi")
-    sa = vsets.select(
-        F.col("_id").alias("a_id"), F.col("sh_set").alias("a_set"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sb = vsets.select(
-        F.col("_id").alias("b_id"), F.col("sh_set").alias("b_set"),
-        F.col("n_sh").alias("n_b"),
-    )
-    scored = (
-        cand_v.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn("n_inter", F.size(F.array_intersect("a_set", "b_set")).cast("long"))
-        .where(
-            F.col("n_inter") * F.lit(td)
-            >= F.lit(tn) * (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
-    )
+    v = _members(sets, cand, "a_id", "b_id")
+    scored = _verify(_spread(cand), _jaccard_gate(tn, td, "n_a", "n_b"), a=v, b=v)
     return scored.select(
-        "a_id",
-        "b_id",
-        "n_inter",
-        "n_a",
-        "n_b",
-        (
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-        ).alias("jaccard"),
+        "a_id", "b_id", "n_inter", "n_a", "n_b", _jaccard("n_a", "n_b").alias("jaccard")
     )
 
 

@@ -28,9 +28,12 @@ class PlanSummary:
     n_shuffle_exchanges: int = 0
     n_broadcast_exchanges: int = 0
     # round-robin exchanges counted SEPARATELY from the keyed shuffles:
-    # the only producer in this codebase is the adaptive small-scan
-    # spread (`plans.registry._spread_path`, r12), which fires only when a
-    # scan's split count is below the session parallelism — at
+    # the producers in this codebase are the adaptive small-input
+    # spreads — `plans.registry._spread_path` (r12, scans) and
+    # `operators.dedup._spread` (dedup inputs before their row-local
+    # set or digest builds, and the candidate-pair list on the verify
+    # side of the two exact self-joins) — which fire only when the
+    # input's partition count is below the session parallelism: at
     # production scale the condition is never met and the node is absent,
     # so the keyed-shuffle pins (the 100-TB posture guards) stay
     # meaningful with the spread present locally.

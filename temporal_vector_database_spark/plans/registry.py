@@ -11186,9 +11186,11 @@ def q_jaccard_exact_join(spark, sf_dir):
     t=1/2 over width-7 shingle sets — the recall-complete dedup tier
     beside the banding-recall LSH path. Corpus = the doc_id % 10 == 0
     subset plus lightly-edited copies (first 20 chars dropped, ids
-    offset by 10^6) of its doc_id % 25 == 0 docs, so the exact join
-    must find every (original, copy) pair — banding could miss
-    borderline ones; prefix filtering provably cannot.
+    offset by 10^6) of ALL doc_id % 25 == 0 docs — the oracle's corpus;
+    copies of the odd multiples of 25 have no source in the subset and
+    match only genuine near-dups of other docs (one pair at sf0.1) — so
+    the exact join must find every (original, copy) pair — banding
+    could miss borderline ones; prefix filtering provably cannot.
 
     Why a subset: this fixture's ~30-word vocabulary yields only ~5.8k
     distinct width-7 shingles, so every doc's 'rarest' prefix tokens
@@ -11199,10 +11201,9 @@ def q_jaccard_exact_join(spark, sf_dir):
     lists are short; the subset keeps the gate honest and bounded."""
     from temporal_vector_database_spark.operators.dedup import jaccard_prefix_join
 
-    docs = _documents(spark, sf_dir).where(
-        F.col("doc_id") % 10 == 0
-    )
-    leaks = docs.where(F.col("doc_id") % 25 == 0).select(
+    all_docs = _documents(spark, sf_dir)
+    docs = all_docs.where(F.col("doc_id") % 10 == 0)
+    leaks = all_docs.where(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
         F.expr("substring(text, 21)").alias("text"),
     )
@@ -11539,7 +11540,7 @@ ORACLES["ngram_containment_short"] = ORACLES["ngram_containment_short"].replace(
 def q_ngram_containment_small(spark, sf_dir):
     """r07: EXACT-RECALL containment at extreme asymmetry —
     ``band_on="small"`` (rare-first prefix postings, the containment
-    analogue of the PPJoin tier; see ``_containment_prefix_pairs``).
+    analogue of the PPJoin tier; see ``ngram_containment_pairs``).
     The fixture injects the exact failure mode of symmetric MinHash
     banding: a TINY doc (words 5..12 of a long source) fully embedded
     in its HUGE source — containment_a = ~1.0, Jaccard tiny, and the

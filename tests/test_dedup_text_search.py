@@ -266,6 +266,24 @@ def test_connected_components_self_loop_only_nodes_dropped(spark):
     assert got == {1: 1, 2: 1}
 
 
+def test_connected_components_rejects_mixed_id_types(spark):
+    """Ids from both pair columns land in both output columns, so the
+    two columns must share one type: a mixed input is refused up front
+    instead of typing ``id`` from one column and ``comp`` from the
+    other."""
+    from temporal_vector_database_spark.operators.dedup import (
+        connected_components,
+    )
+
+    for rows, schema in (
+        ([(1, 2), (2, 3)], "a_id int, b_id long"),
+        ([(1, "2"), (2, "3")], "a_id long, b_id string"),
+    ):
+        pairs = spark.createDataFrame(rows, schema)
+        with pytest.raises(ValueError, match="same type"):
+            connected_components(pairs)
+
+
 def test_dedup_survivors_assignment(spark, sf_dir):
     """Survivor table invariants: one row per document, every canonical is
     itself a survivor, and canonical_id <= doc_id (min-id convention)."""
@@ -664,14 +682,43 @@ def test_containment_small_side_finds_pairs_symmetric_bands_miss(spark):
 
 
 def test_containment_small_rational_threshold_guard():
+    """Every exact-recall entry point checks its threshold before it
+    touches its inputs (``None`` here): ``0 < t <= 1`` and an exact
+    rational with denominator <= 1e4. Reached through the public
+    ``ngram_containment_pairs(band_on="small")``; the other entry points
+    are further inputs."""
     from temporal_vector_database_spark.operators.dedup import (
-        _containment_prefix_pairs,
+        containment_decontaminate,
+        cross_corpus_jaccard_exact,
+        jaccard_prefix_join,
+        ngram_containment_pairs,
+        sorted_neighborhood_pairs,
     )
 
+    def small(t):
+        return ngram_containment_pairs(None, min_containment=t, band_on="small")
+
     with pytest.raises(ValueError):
-        _containment_prefix_pairs(None, "text", 3, 0.3333333333333333)
+        small(0.3333333333333333)
     with pytest.raises(ValueError):
-        _containment_prefix_pairs(None, "text", 3, 0.0)
+        small(0.0)
+
+    float_entries = (
+        small,
+        lambda t: cross_corpus_jaccard_exact(None, None, min_jaccard=t),
+        lambda t: containment_decontaminate(None, None, min_containment=t),
+    )
+    # num == 0, num > den, not a short decimal
+    for bad, msg in ((0.0, r"\(0, 1\]"), (1.5, r"\(0, 1\]"), (1 / 3, "short decimal")):
+        for entry in float_entries:
+            with pytest.raises(ValueError, match=msg):
+                entry(bad)
+    for (num, den), msg in (
+        ((0, 2), r"\(0, 1\]"), ((3, 2), r"\(0, 1\]"), ((1, 10_001), "short decimal"),
+    ):
+        for entry in (jaccard_prefix_join, sorted_neighborhood_pairs):
+            with pytest.raises(ValueError, match=msg):
+                entry(None, min_jaccard_num=num, min_jaccard_den=den)
 
 
 def test_containment_decontaminate_catches_quoted_eval(spark):

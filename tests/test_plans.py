@@ -816,10 +816,45 @@ def test_cross_corpus_exact_plan_shape(spark, qmap):
     """r08: the exact cross-corpus tier must stay cartesian-free (all
     candidate generation is equi-join) and its only window must be
     keyed (no empty partition spec collapsing the corpus)."""
-    plan = formatted_plan(qmap["cross_corpus_near_dup_exact"](spark, SF_DIR))
+    from temporal_vector_database_spark.plans.inspect import summarize_plan
+
+    df = qmap["cross_corpus_near_dup_exact"](spark, SF_DIR)
+    plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Exchange SinglePartition" not in plan
+    # post-checkpoint keyed shuffles of the shared filter-verify pipeline;
+    # no round-robin: the verify-side spread was measured slower here
+    summarize_plan(df).assert_max_shuffles(3, max_roundrobin=0)
+
+
+@pytest.mark.parametrize(
+    "query, max_shuffles, max_roundrobin",
+    [
+        ("jaccard_exact_join", 4, 1),
+        ("ngram_containment_small", 4, 1),
+        ("decontaminate_containment", 2, 0),
+    ],
+)
+def test_exact_prefix_join_plan_posture(
+    spark, qmap, query, max_shuffles, max_roundrobin
+):
+    """The exact-recall prefix joins share one filter-verify pipeline, so
+    a change to a shared stage moves all their plans (the fourth,
+    cross_corpus_near_dup_exact, is pinned above): each stays
+    cartesian-free with no single-partition exchange, and its
+    post-checkpoint plan (candidate prune, verify, best-match tail) keeps
+    its keyed-shuffle and round-robin counts. The round-robin exchange
+    of the two self-joins is the verify-side candidate spread."""
+    from temporal_vector_database_spark.plans.inspect import summarize_plan
+
+    df = qmap[query](spark, SF_DIR)
+    plan = formatted_plan(df)
+    for node in (
+        "CartesianProduct", "BroadcastNestedLoopJoin", "Exchange SinglePartition"
+    ):
+        assert node not in plan, node
+    summarize_plan(df).assert_max_shuffles(max_shuffles, max_roundrobin=max_roundrobin)
 
 
 def test_mips_topk_plan_broadcast_queries_and_prereduce(spark, qmap):

@@ -959,14 +959,21 @@ def test_robust_stats_matches_numpy(spark, vals):
 )
 def test_cross_corpus_exact_recall_property(spark, corpus_texts, ev_texts, thr):
     """r08 recall-proof property: on arbitrary small-alphabet corpora
-    (adversarially dense shingle collisions), cross_corpus_jaccard_exact
-    returns EXACTLY the brute-force best-match set at any threshold —
-    the PPJoin per-side prefix tier under the eval-df order loses no
-    qualifying pair and invents none."""
+    (adversarially dense shingle collisions), every exact-recall prefix
+    join returns EXACTLY its brute-force answer at any threshold — no
+    qualifying pair lost, none invented: cross_corpus_jaccard_exact (the
+    best match per corpus doc), containment_decontaminate (the same over
+    eval-side containment), and the two self-joins over corpus + eval
+    docs, jaccard_prefix_join and ngram_containment_pairs(band_on=
+    "small") (every qualifying pair)."""
     import hashlib
+    from itertools import combinations
 
     from temporal_vector_database_spark.operators.dedup import (
+        containment_decontaminate,
         cross_corpus_jaccard_exact,
+        jaccard_prefix_join,
+        ngram_containment_pairs,
     )
 
     tn, td = thr
@@ -986,29 +993,71 @@ def test_cross_corpus_exact_recall_property(spark, corpus_texts, ev_texts, thr):
 
     corpus_rows = list(enumerate(corpus_texts))
     ev_rows = [(100 + i, t) for i, t in enumerate(ev_texts)]
-    want = {}
-    for cid, ct in corpus_rows:
-        best = None
-        C = shset(ct)
-        for eid, et in sorted(ev_rows):
-            E = shset(et)
-            ni = len(C & E)
-            if ni * (td + tn) >= tn * (len(C) + len(E)):
-                j = ni / (len(C) + len(E) - ni)
-                if best is None or j > best[1]:
-                    best = (eid, j, ni)
-        if best is not None:
-            want[cid] = (best[0], best[2])
+    sets = {i: shset(t) for i, t in corpus_rows + ev_rows}
+
+    def best_match(ok, score):
+        want = {}
+        for cid, _ in corpus_rows:
+            best = None
+            for eid, _ in sorted(ev_rows):
+                C, E = sets[cid], sets[eid]
+                ni = len(C & E)
+                if ok(ni, len(C), len(E)):
+                    s = score(ni, len(C), len(E))
+                    if best is None or s > best[1]:
+                        best = (eid, s, ni)
+            if best is not None:
+                want[cid] = (best[0], best[2])
+        return want
+
+    def pairs(ok):
+        want = set()
+        for a, b in combinations(sorted(sets), 2):
+            ni = len(sets[a] & sets[b])
+            if ok(ni, len(sets[a]), len(sets[b])):
+                want.add((a, b, ni))
+        return want
+
+    def jac_ok(ni, na, nb):
+        return ni * td >= tn * (na + nb - ni)
 
     corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
     ev = spark.createDataFrame(ev_rows, "doc_id long, text string")
+    both = corpus.unionByName(ev)
+
     got = {
         r.doc_id: (r.eval_doc_id, r.n_inter)
         for r in cross_corpus_jaccard_exact(
             corpus, ev, width=width, min_jaccard=tn / td
         ).collect()
     }
-    assert got == want
+    assert got == best_match(jac_ok, lambda ni, nc, ne: ni / (nc + ne - ni))
+
+    got = {
+        r.doc_id: (r.eval_doc_id, r.n_inter)
+        for r in containment_decontaminate(
+            corpus, ev, width=width, min_containment=tn / td
+        ).collect()
+    }
+    assert got == best_match(
+        lambda ni, nc, ne: ni * td >= tn * ne, lambda ni, nc, ne: ni / ne
+    )
+
+    got = {
+        (r.a_id, r.b_id, r.n_inter)
+        for r in jaccard_prefix_join(
+            both, width=width, min_jaccard_num=tn, min_jaccard_den=td
+        ).collect()
+    }
+    assert got == pairs(jac_ok)
+
+    got = {
+        (r.a_id, r.b_id, r.n_inter)
+        for r in ngram_containment_pairs(
+            both, width=width, min_containment=tn / td, band_on="small"
+        ).collect()
+    }
+    assert got == pairs(lambda ni, na, nb: ni * td >= tn * min(na, nb))
 
 
 @settings(max_examples=6, deadline=None, derandomize=True)
