@@ -1,16 +1,20 @@
 """Drop-in facade mirroring the reference's public API surface.
 
 ``TemporalVectorDatabase`` (reference ``storage/temporal_database.py:20``)
-re-expressed over a partitioned parquet ``versions`` table: every method a
-reference user calls exists here with the same name and semantics, but each
-one is a distributed DataFrame plan instead of per-row HDF5 traffic —
-point lookups become partition-pruned filters, and every method also has a
-batch form (the reference's one-at-a-time loops are the anti-pattern this
-engine removes, SURVEY.md §4.2).
+re-expressed over a parquet ``versions`` table: every method a reference
+user calls exists here with the same name and semantics, and every method
+also has a batch form (the reference's one-at-a-time loops are the
+anti-pattern this engine removes, SURVEY.md §4.2).
 
 Point-read methods return a Python dict (the reference returns
 ``ReconstructionResult`` dataclasses); batch methods return DataFrames.
-Storage is append-only parquet; "opening a DB" is pointing at a directory.
+A point, as-of or latest read costs one timeline: one ``collect`` of that
+content's rows (the table is not partitioned; the content filter is pushed
+down to the parquet scan, which skips row groups whose ``content_id``
+statistics exclude it), replayed on the driver by
+``reconstruct.replay_timeline`` — bit-equal to the distributed fold that
+batch reads keep. Storage is append-only parquet; "opening a DB" is
+pointing at a directory.
 """
 
 from __future__ import annotations
@@ -21,8 +25,9 @@ import os
 from datetime import datetime
 from typing import Any, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from temporal_vector_database_spark.config import DEFAULT_CONFIG, TVDBConfig
 from temporal_vector_database_spark.operators import integrity as I
@@ -59,6 +64,8 @@ class TemporalVectorDatabase:
     # sidecar — underscore-prefixed files are invisible to Spark's parquet
     # scans (same convention as ``_SUCCESS``). Local-path I/O below; on a
     # cluster store this becomes one tiny object PUT next to the table.
+    # The sidecar also records the table schema, so reads name it instead
+    # of running a footer-merge job on every call.
 
     _META_NAME = "_tvdb_meta.json"
 
@@ -66,17 +73,40 @@ class TemporalVectorDatabase:
     def _meta_path(self) -> str:
         return os.path.join(self.table_path, self._META_NAME)
 
-    def _persist_meta(self, encoded: DataFrame) -> None:
-        if os.path.exists(self._meta_path):
-            return
-        dim_row = (
-            encoded.where(F.col("kind") == "base").select(F.size("embedding").alias("d")).first()
-        )
-        meta = {
+    def _meta(self) -> dict:
+        if not os.path.exists(self._meta_path):
+            return {}
+        with open(self._meta_path) as f:
+            return json.load(f)
+
+    def _persist_meta(self, schema: T.StructType, dim: int | None, fresh: bool) -> None:
+        """Update the sidecar after an append of rows with ``schema``
+        (``dim``: their embedding dimension); ``fresh``: those rows are
+        the whole table (a first write), so its schema is known without
+        reading the files."""
+        meta = self._meta() or {
             "format_version": 1,
-            "embedding_dim": int(dim_row["d"]) if dim_row else None,
+            "embedding_dim": dim,
             "config": dataclasses.asdict(self.cfg),
         }
+        if "schema" in meta:
+            # additive evolution, driver-side: a write that brings new
+            # columns appends them (nullable — older files read them as null)
+            recorded = T.StructType.fromJson(meta["schema"])
+            new = [f for f in schema.fields if f.name not in recorded.fieldNames()]
+            if not new:
+                return
+            for f in new:
+                recorded.add(f.name, f.dataType, True)
+            schema = recorded
+        elif not fresh:
+            # a table without a recorded schema: one footer merge over it
+            # as it is now (reads force every field nullable either way)
+            schema = self._merged_read().schema
+        meta["schema"] = json.loads(schema.json())
+        self._write_meta(meta)
+
+    def _write_meta(self, meta: dict) -> None:
         with open(self._meta_path, "w") as f:
             json.dump(meta, f, indent=1, sort_keys=True)
 
@@ -88,26 +118,23 @@ class TemporalVectorDatabase:
         with (reference: config attrs read back from the HDF5 file). An
         explicit ``cfg`` overrides; a table without a sidecar (pre-meta or
         foreign) falls back to defaults."""
-        meta_path = os.path.join(table_path, cls._META_NAME)
-        if cfg is None and os.path.exists(meta_path):
-            with open(meta_path) as f:
-                stored = json.load(f)
+        db = cls(spark, table_path, cfg or DEFAULT_CONFIG)
+        stored = db._meta()
+        if cfg is None and stored:
             known = {fld.name for fld in dataclasses.fields(TVDBConfig)}
-            cfg = TVDBConfig(
+            db.cfg = TVDBConfig(
                 **{k: v for k, v in stored.get("config", {}).items() if k in known}
             )
-        return cls(spark, table_path, cfg or DEFAULT_CONFIG)
+        return db
 
     @property
     def embedding_dim(self) -> int | None:
         """Stored embedding dimensionality (reference DB-level constant,
         ``storage/storage_engine.py:50``): from the sidecar when present,
         else measured from the table."""
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                d = json.load(f).get("embedding_dim")
-            if d is not None:
-                return int(d)
+        d = self._meta().get("embedding_dim")
+        if d is not None:
+            return int(d)
         if not self._exists:
             return None
         row = (
@@ -132,9 +159,52 @@ class TemporalVectorDatabase:
     def versions(self) -> DataFrame:
         """The full ``versions`` table (SURVEY.md §1.4 schema).
 
-        ``mergeSchema`` tolerates tables written before optional columns
-        (e.g. ``metadata``) existed — schema evolution is additive-only."""
+        Read with the schema recorded in the sidecar: no schema-inference
+        job, and files written before optional columns (e.g.
+        ``metadata``) existed read them as null — schema evolution is
+        additive-only. A table whose sidecar has no schema (written
+        before schemas were recorded, or foreign) falls back to a
+        ``mergeSchema`` footer merge."""
+        schema = self._meta().get("schema")
+        if schema is None:
+            return self._merged_read()
+        return self.spark.read.schema(T.StructType.fromJson(schema)).parquet(self.table_path)
+
+    def _merged_read(self) -> DataFrame:
         return self.spark.read.option("mergeSchema", "true").parquet(self.table_path)
+
+    def _timeline(self, content_id: str, *extra, upto: int | None = None) -> list[Row]:
+        """One content's stored rows, sorted by ``seq``, in ONE ``collect``
+        whose content filter is pushed down to the parquet scan
+        (``upto`` keeps ``seq <= upto`` only; ``extra`` adds projected
+        columns)."""
+        v = self.versions().where(F.col("content_id") == content_id)
+        if upto is not None:
+            v = v.where(F.col("seq") <= upto)
+        return sorted(v.select(*R.REPLAY_INPUT, *extra).collect(), key=lambda r: r.seq)
+
+    def _point_result(self, content_id: str, rec: dict) -> dict:
+        """A replayed version as the reference's result dict, with the
+        quality columns of ``reconstruct.with_quality_columns`` computed
+        over a one-row local frame (an Arrow-built local relation: the
+        optimizer folds the projection, so no job runs)."""
+        import pandas as pd
+
+        keys = ("target_seq", "base_seq", "cost", "avg_magnitude", "avg_sparsity")
+        one = self.spark.createDataFrame(
+            pd.DataFrame([(content_id, *(rec[k] for k in keys))], columns=("content_id", *keys)),
+            "content_id string, target_seq int, base_seq int, cost int,"
+            " avg_magnitude double, avg_sparsity double",
+        )
+        q = R.with_quality_columns(one, self.cfg).select("error_bound", "quality_score").first()
+        return {
+            "content_id": content_id,
+            **{k: rec[k] for k in keys},
+            "deltas_applied": rec["deltas_applied"],
+            "embedding": rec["embedding"].tolist(),
+            "error_bound": q.error_bound,
+            "quality_score": q.quality_score,
+        }
 
     # -- write path (O1-O3) --------------------------------------------------
 
@@ -142,18 +212,26 @@ class TemporalVectorDatabase:
         """Batch write path: encode raw (content_id, ts, embedding
         [, force_base, base_interval]) rows continuing stored timelines,
         append to the table. Returns the number of rows written."""
-        if self._exists:
+        fresh = not self._exists
+        if not fresh:
             encoded = append_versions(self.versions(), raw, self.cfg)
         else:
             from temporal_vector_database_spark.operators.ingest import ingest
 
             encoded = ingest(raw, self.cfg)
-        encoded = encoded.localCheckpoint(eager=True)  # freeze before append
-        n = encoded.count()
-        encoded.write.mode("append").parquet(self.table_path)
-        self._persist_meta(encoded)
+        # one pass: the write encodes each row once (nothing is cached),
+        # and the row count and embedding dimension are observed on the
+        # way to disk. The stored rows the encode continues from are the
+        # files listed before the write, which adds files only on commit.
+        written = Observation("tvdb_add_versions")
+        encoded.observe(
+            written,
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.when(F.col("kind") == "base", F.size("embedding"))).alias("dim"),
+        ).write.mode("append").parquet(self.table_path)
+        self._persist_meta(encoded.schema, written.get["dim"], fresh)
         self._invalidate_index()
-        return n
+        return int(written.get["n"])
 
     def add_content_version(
         self,
@@ -190,15 +268,13 @@ class TemporalVectorDatabase:
 
     def get_version(self, content_id: str, sequence_number: int) -> dict | None:
         """O5 point reconstruction (``get_version``,
-        ``storage/temporal_database.py:180-195``). The literal content id
-        is pushed to the scan (partition-pruned filter) BEFORE the fold,
-        so a point read touches one timeline, not the table."""
-        targets = self.spark.createDataFrame(
-            [(content_id, sequence_number)], "content_id string, target_seq int"
-        )
-        v = self.versions().where(F.col("content_id") == content_id)
-        rows = R.with_quality_columns(R.reconstruct_at(v, targets), self.cfg).collect()
-        return _result_dict(rows[0]) if rows else None
+        ``storage/temporal_database.py:180-195``): one pushed-down
+        ``collect`` of the content's rows up to the target, replayed on
+        the driver. Same dict as ``with_quality_columns(reconstruct_at(...))``;
+        None for a missing sequence or one below the first base."""
+        rows = self._timeline(content_id, upto=sequence_number)
+        rec = R.replay_timeline(rows, emit=sequence_number)
+        return self._point_result(content_id, rec[0]) if rec else None
 
     def get_version_at_sequence(
         self, content_id: str, sequence_number: int
@@ -207,8 +283,8 @@ class TemporalVectorDatabase:
         ``core/data_structures.py:204-211``): a METADATA-ONLY stored-row
         probe — ``(embedding, version_id, True)`` for a base row,
         ``(None, version_id, False)`` for a delta row (no reconstruction
-        is performed), ``None`` for a missing sequence. One pruned scan
-        of the single timeline; the fold never runs."""
+        is performed), ``None`` for a missing sequence. One pushed-down
+        filtered scan of the single timeline; the fold never runs."""
         rows = (
             self.versions()
             .where(
@@ -235,26 +311,45 @@ class TemporalVectorDatabase:
         return self.get_version(content_id, int(seq))
 
     def get_latest_version(self, content_id: str) -> dict | None:
-        """O8 (``get_latest_version``, ``storage/temporal_database.py:222-236``)."""
-        v = self.versions().where(F.col("content_id") == content_id)
-        rows = R.with_quality_columns(R.reconstruct_latest(v), self.cfg).collect()
-        return _result_dict(rows[0]) if rows else None
+        """O8 (``get_latest_version``, ``storage/temporal_database.py:222-236``):
+        one ``collect`` of the timeline, replayed to its last version.
+        Same dict as ``with_quality_columns(reconstruct_latest(...))``."""
+        rec = R.replay_timeline(self._timeline(content_id), emit="last")
+        return self._point_result(content_id, rec[0]) if rec else None
 
     def get_version_at_time(self, content_id: str, timestamp: datetime) -> dict | None:
         """O6 as-of (``get_version_at_time`` →
-        ``core/reconstruction_service.py:129-157``; inclusive ``ts <= t``)."""
-        probes = self.spark.createDataFrame(
-            [(0, content_id, timestamp)], "probe_id int, content_id string, t timestamp"
-        )
-        v = self.versions().where(F.col("content_id") == content_id)
-        rows = R.reconstruct_asof(v, probes).collect()
-        return _result_dict(rows[0]) if rows else None
+        ``core/reconstruction_service.py:129-157``; inclusive ``ts <= t``):
+        the target is the largest ``seq`` with ``ts <= t``, compared in
+        the same Spark projection that collects the timeline (Spark's
+        timestamp semantics), then replayed on the driver. Same dict as
+        ``reconstruct_asof(...)`` with one probe ``(0, content_id, t)``;
+        None when ``t`` precedes every version or the target precedes the
+        first base."""
+        t = F.lit(timestamp).cast("timestamp")
+        rows = self._timeline(content_id, (F.col("ts") <= t).alias("_le"), t.alias("t"))
+        seqs = [r.seq for r in rows if r._le]
+        if not seqs:
+            return None
+        rec = R.replay_timeline(rows, emit=max(seqs))
+        if not rec:
+            return None
+        r = rec[0]
+        return {
+            "content_id": content_id,
+            **{k: r[k] for k in R.REPLAY_COLUMNS if k != "embedding"},
+            "embedding": r["embedding"].tolist(),
+            "t": rows[0].t,
+            "probe_id": 0,
+        }
 
     def get_version_range(self, content_id: str, start_seq: int, end_seq: int) -> DataFrame:
         """O7 (``get_version_range``, ``storage/temporal_database.py:255-272``)
-        — one distributed pass, unlike the reference's reload-per-target loop."""
+        — one distributed pass, unlike the reference's reload-per-target loop.
+        One timeline: its fold re-reads the filtered rows per branch instead
+        of persisting them, so the read leaves no cached frame behind."""
         v = self.versions().where(F.col("content_id") == content_id)
-        return R.reconstruct_range(v, start_seq, end_seq)
+        return R.reconstruct_range(v, start_seq, end_seq, materialize=False)
 
     def reconstruct(self, targets: DataFrame) -> DataFrame:
         """Batch point-reconstruction with quality columns — any number of
@@ -271,10 +366,16 @@ class TemporalVectorDatabase:
         from temporal_vector_database_spark.operators.search import build_search_index
 
         if self._index is None:
-            self._index = build_search_index(self.versions())
+            # persist, not build_search_index's localCheckpoint: a
+            # checkpointed frame cannot be released through the DataFrame
+            # API, and a write must free the index it supersedes.
+            # Materialized by the first search that reads it.
+            self._index = build_search_index(self.versions(), materialize=False).persist()
         return self._index
 
     def _invalidate_index(self) -> None:
+        if self._index is not None:
+            self._index.unpersist()
         self._index = None
 
     def search_similar_content(self, query_embedding: Sequence[float], k: int = 5) -> list[tuple]:
@@ -308,9 +409,11 @@ class TemporalVectorDatabase:
         return I.validate_timeline_integrity(v)
 
     def get_content_statistics(self, content_id: str) -> dict:
-        """A5 bundle (``storage/temporal_database.py:301-330``)."""
+        """A5 bundle (``storage/temporal_database.py:301-330``). One
+        timeline: its fold re-reads the filtered rows per branch instead
+        of persisting them, so the read leaves no cached frame behind."""
         v = self.versions().where(F.col("content_id") == content_id)
-        rows = S.content_statistics(v, self.cfg).collect()
+        rows = S.content_statistics(v, self.cfg, materialize=False).collect()
         return _result_dict(rows[0]) if rows else {}
 
     def get_database_statistics(self) -> dict:
@@ -350,9 +453,7 @@ class TemporalVectorDatabase:
         n = recs.count()
         if n == 0:
             return 0
-        rewritten = promote_bases(v, recs).localCheckpoint(eager=True)
-        rewritten.write.mode("overwrite").parquet(self.table_path)
-        self._invalidate_index()
+        self._overwrite(promote_bases(v, recs).localCheckpoint(eager=True))
         return n
 
     def truncate_before(self, cutoff: datetime) -> int:
@@ -363,9 +464,19 @@ class TemporalVectorDatabase:
         v = self.versions()
         before = v.count()
         rewritten = truncate_before(v, cutoff).localCheckpoint(eager=True)
-        rewritten.write.mode("overwrite").parquet(self.table_path)
-        self._invalidate_index()
+        self._overwrite(rewritten)
         return before - rewritten.count()
+
+    def _overwrite(self, rewritten: DataFrame) -> None:
+        """Replace the table with ``rewritten``. The overwrite deletes the
+        directory, sidecar included: a sidecar is written back with its
+        config and dimension, and the rewritten rows' schema."""
+        meta = self._meta()
+        rewritten.write.mode("overwrite").parquet(self.table_path)
+        if meta:
+            meta["schema"] = json.loads(rewritten.schema.json())
+            self._write_meta(meta)
+        self._invalidate_index()
 
     def diff_between(self, t_a: datetime, t_b: datetime) -> DataFrame:
         """Time-travel DIFF (r07): per content, what changed between the

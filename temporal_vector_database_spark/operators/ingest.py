@@ -355,26 +355,6 @@ def first_epoch_deltas_sql(
     )
 
 
-def timeline_state(versions: DataFrame) -> DataFrame:
-    """Per-content encoder state from a stored ``versions`` table:
-    (last_seq, last_base_seq, reconstruction of the latest version).
-
-    This is what the incremental append path continues from — the batch
-    analogue of the streaming checkpoint state
-    (``streaming/ingest.py``): one window pass + the standard
-    reconstruction fold, no per-content driver loops.
-    """
-    from temporal_vector_database_spark.operators.reconstruct import reconstruct_latest
-
-    latest = reconstruct_latest(versions)
-    return latest.select(
-        "content_id",
-        F.col("target_seq").alias("_st_last_seq"),
-        F.col("base_seq").alias("_st_last_base_seq"),
-        F.col("embedding").alias("_st_recon"),
-    )
-
-
 def append_versions(
     versions: DataFrame, new_raw: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG
 ) -> DataFrame:
@@ -387,7 +367,19 @@ def append_versions(
     state — deltas are computed against the reconstruction of the stored
     latest version, exactly like the reference (which reloads and
     reconstructs seq-1 on every insert).
+
+    One cogroup by ``content_id`` pairs each content's new rows with its
+    stored rows; the stored timeline is replayed in the same Python call
+    (``reconstruct.replay_timeline``, bit-equal to ``reconstruct_latest``)
+    to get ``(last_seq, last_base_seq, reconstruction)``, then the new
+    rows are encoded from there. No window, no join and no persisted
+    frame: one exchange per side, then a narrow Arrow pass.
     """
+    from temporal_vector_database_spark.operators.reconstruct import (
+        REPLAY_INPUT,
+        replay_timeline,
+    )
+
     threshold = cfg.sparsity_threshold
     promo = cfg.base_promotion_sparsity_threshold
     gap_factor = cfg.base_gap_factor
@@ -400,30 +392,30 @@ def append_versions(
         new_raw = new_raw.withColumn(
             "base_interval", F.lit(default_interval).cast("int")
         )
-    # continue-from state is only needed for contents present in THIS
-    # batch — semi-join first so a small append against a huge table
-    # reconstructs a handful of timelines, not all of them
+    # the stored rows are only needed for contents present in THIS batch
+    # — semi-join first so a small append against a huge table replays a
+    # handful of timelines, not all of them
     touched = versions.join(
         new_raw.select("content_id").distinct(), "content_id", "left_semi"
-    )
-    state = timeline_state(touched)
-    staged = new_raw.join(state, "content_id", "left")
+    ).select("content_id", *REPLAY_INPUT)
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        content_id = pdf["content_id"].iloc[0]
-        interval_default = int(pdf["base_interval"].iloc[0])
+    def encode(pdf: pd.DataFrame, stored: pd.DataFrame) -> pd.DataFrame:
         out: dict[str, list] = {k: [] for k in (
             "content_id", "seq", "ts", "kind", "embedding", "sparse_idx",
             "sparse_val", "from_seq", "magnitude", "n_changed", "total_dims",
             "version_id", "metadata",
         )}
+        if pdf.empty:
+            return pd.DataFrame(out)
+        pdf = pdf.sort_values("ts")
+        content_id = pdf["content_id"].iloc[0]
+        interval_default = int(pdf["base_interval"].iloc[0])
         metas = pdf["metadata"] if "metadata" in pdf.columns else [None] * len(pdf)
-        st_seq = pdf["_st_last_seq"].iloc[0]
-        if pd.notna(st_seq):
-            last_seq = int(st_seq)
-            last_base_seq = int(pdf["_st_last_base_seq"].iloc[0])
-            recon = np.asarray(pdf["_st_recon"].iloc[0], dtype=np.float64)
+        state = replay_timeline(stored.sort_values("seq").itertuples(index=False), "last")
+        if state:
+            last_seq = state[0]["target_seq"]
+            last_base_seq = state[0]["base_seq"]
+            recon = state[0]["embedding"]
         else:
             last_seq, last_base_seq, recon = 0, 0, None
         for ts, emb, force, interval, meta in zip(
@@ -478,7 +470,11 @@ def append_versions(
         return pd.DataFrame(out)
 
     schema = _versions_schema(new_raw.schema)
-    return staged.groupBy("content_id").applyInPandas(encode, schema=schema)
+    return (
+        new_raw.groupBy("content_id")
+        .cogroup(touched.groupBy("content_id"))
+        .applyInPandas(encode, schema=schema)
+    )
 
 
 def ingest_late(

@@ -72,7 +72,10 @@ def validate_timeline_integrity(versions: DataFrame, gap_flag: int = 20) -> Data
     """V2: one row per content — counts, missing/dangling counts, max base
     gap, ``valid`` flag (missing or dangling ⇒ invalid; a large gap is an
     issue but does NOT flip ``valid`` in the reference,
-    ``core/reconstruction_service.py:345-356``).
+    ``core/reconstruction_service.py:345-356``). A content with two rows
+    at one ``seq`` is also invalid: the reference's per-seq storage cannot
+    hold them, and a replay would apply both (this engine's append-only
+    table can, e.g. after two writers continued from the same head).
 
     Single-pass form: ONE groupBy(content_id) collects the per-timeline
     sequence/base/delta structure, then every check is an array expression
@@ -115,7 +118,12 @@ def validate_timeline_integrity(versions: DataFrame, gap_flag: int = 20) -> Data
         .withColumn("dangling_seqs", F.when(F.size(dangling) > 0, dangling))
         .withColumn("n_dangling", F.coalesce(F.size("dangling_seqs"), F.lit(0)).cast("int"))
         .withColumn("max_base_gap", F.when(nb >= 2, F.array_max(gap_list)).cast("int"))
-        .withColumn("valid", (F.col("n_missing") == 0) & (F.col("n_dangling") == 0))
+        .withColumn(
+            "valid",
+            (F.col("n_missing") == 0)
+            & (F.col("n_dangling") == 0)
+            & (F.size("_present") == F.size(F.array_distinct("_present"))),
+        )
         .withColumn("large_gap", F.coalesce(F.col("max_base_gap") > gap_flag, F.lit(False)))
         .drop("_present", "_bases", "_dpairs")
     )

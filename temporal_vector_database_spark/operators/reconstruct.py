@@ -6,6 +6,9 @@ or before the target, then sequentially fold sparse deltas onto it
 target is collected in one aggregation and folded with array/map HOF
 expressions (map_zip_with merge per delta, in delta_seq order — the
 reference's exact application order), entirely JVM-side.
+``replay_timeline`` is the same fold over ONE timeline in numpy, bit-equal
+to it; it serves the grouped-map batch twin, the append encoder's
+continue-from state and the facade's single-content reads.
 
 Scale posture: every join/aggregate here is keyed by ``content_id`` (and
 the governing-base epoch), so a 1000-executor cluster shuffles once and
@@ -26,6 +29,8 @@ Semantics preserved (SURVEY.md §2.3):
 """
 
 from __future__ import annotations
+
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -58,9 +63,14 @@ def _fold_deltas(
     onto the governing base embedding.
 
     ``targets`` must have columns (content_id, target_seq, base_seq);
-    ``tagged`` is ``with_governing_base(versions)`` — callers should pass it
-    MATERIALIZED (``persist``) so every branch below reuses the one
-    content_id exchange instead of re-scanning + re-windowing per branch.
+    ``tagged`` is ``with_governing_base(versions)``. The batch callers
+    (``reconstruct_at``/``_all``/``_range``/``_latest``) persist it so
+    every branch below reuses the one content_id exchange instead of
+    re-scanning + re-windowing per branch. Single-timeline reads (the
+    facade's point, as-of and latest reads, and the append's
+    continue-from state) no longer come through here: they replay one
+    collected timeline with :func:`replay_timeline`, which is bit-equal
+    to this fold.
 
     Single-aggregation design: the whole delta chain of a target is
     collected once (``collect_list`` → ``array_sort`` by delta_seq), and
@@ -263,17 +273,105 @@ def reconstruct_all_tagged(
     return _fold_deltas(targets, tagged, with_embedding=with_embedding)
 
 
+# the stored columns a replay reads, and the columns of each result
+REPLAY_INPUT = (
+    "seq", "kind", "embedding", "sparse_idx", "sparse_val", "magnitude",
+    "n_changed", "total_dims", "version_id",
+)
+REPLAY_COLUMNS = (
+    "target_seq", "base_seq", "cost", "avg_magnitude", "avg_sparsity",
+    "deltas_applied", "embedding",
+)
+
+
+def replay_timeline(rows: Iterable, emit: str | int = "all") -> list[dict]:
+    """Replay ONE content's stored rows, in ``seq`` order, and return the
+    reconstruction of the requested targets — the per-timeline fold
+    shared by the grouped-map batch twin (:func:`reconstruct_all_folded`),
+    the append encoder's continue-from state
+    (``ingest.append_versions``) and the facade's driver-side point,
+    as-of and latest reads.
+
+    ``rows``: records with the :data:`REPLAY_INPUT` attributes, sorted
+    by ``seq``. ``emit``: ``"all"`` (every
+    reconstructable version), ``"last"`` (the final version only, if
+    reconstructable) or one stored ``seq`` (nothing if it is absent or
+    precedes the first base). Each result holds :data:`REPLAY_COLUMNS`.
+
+    Bit-equal to :func:`_fold_deltas` because it follows that plan's
+    operation order, not the reference's per-delta in-place fold:
+    - a chain's deltas sum into a dense accumulator that starts at 0.0,
+      in ``delta_seq`` order; one delta's own entries are pre-summed
+      first (the declarative map merge adds a delta's duplicate indices
+      together before merging the delta into the chain sum);
+    - indices outside ``[0, dim)`` are dropped (the declarative map
+      lookup probes keys ``0..dim-1`` only; reference quirk #9 for
+      ``>= dim``, a deliberate deviation for negative indices, which the
+      reference would wrap);
+    - the accumulator is added to the base once; an empty chain leaves
+      the base untouched;
+    - chain averages are left-to-right sums of Python floats divided by
+      the chain length (never ``np.mean``, whose pairwise summation
+      differs in the last bits).
+    A delta before any base is not reconstructable and is skipped.
+    """
+    import numpy as np
+
+    out: list[dict] = []
+    base = acc = None
+    base_seq = seq = None
+    mag_sum = spars_sum = 0.0
+    applied: list[str] = []
+
+    def state() -> dict:
+        n = len(applied)
+        return {
+            "target_seq": seq,
+            "base_seq": base_seq,
+            "cost": n,
+            "avg_magnitude": mag_sum / n if n else None,
+            "avg_sparsity": spars_sum / n if n else None,
+            "deltas_applied": list(applied),
+            "embedding": base + acc if n else base.copy(),
+        }
+
+    for row in rows:
+        seq = int(row.seq)
+        if row.kind == "base":
+            base = np.asarray(row.embedding, dtype=np.float64)
+            acc = np.zeros_like(base)
+            base_seq = seq
+            mag_sum = spars_sum = 0.0
+            applied = []
+        elif base is None:
+            continue
+        else:
+            idx = np.asarray(row.sparse_idx, dtype=np.int64)
+            val = np.asarray(row.sparse_val, dtype=np.float64)
+            ok = (idx >= 0) & (idx < base.shape[0])
+            delta = np.zeros_like(acc)
+            np.add.at(delta, idx[ok], val[ok])
+            acc += delta
+            mag_sum += float(row.magnitude)
+            spars_sum += float(row.n_changed) / float(row.total_dims)
+            applied.append(row.version_id)
+        if emit == "all" or emit == seq:
+            out.append(state())
+            if emit == seq:
+                break
+    if emit == "last" and base is not None:
+        out.append(state())
+    return out
+
+
 def reconstruct_all_folded(versions: DataFrame, emit: str = "all") -> DataFrame:
     """O7 twin of `reconstruct_all`: one grouped-map cumulative fold.
 
-    Same output (schema and values) as ``reconstruct_all``, different
-    physical plan: ONE shuffle on ``content_id``, then each timeline is
-    replayed sequentially in numpy (`np.add.at` per delta, prefix
-    snapshots emitted per version) — versus the declarative plan's
-    window + epoch join + explode + two aggregations + three joins.
-    Equality is pinned in tests (embeddings are exact — per-index
-    addition over the fixture's dyadic grid commutes; the chain-average
-    columns agree to float tolerance, as their summation order differs).
+    Same output (schema and values, bit for bit) as ``reconstruct_all``,
+    different physical plan: ONE shuffle on ``content_id``, then each
+    timeline is replayed sequentially in numpy by
+    :func:`replay_timeline` — versus the declarative plan's window +
+    epoch join + explode + two aggregations + three joins.
 
     ``emit="last"`` keeps the replay but emits ONLY each timeline's final
     state — the O8 latest-version twin: one shuffle, one narrow pass, no
@@ -285,73 +383,21 @@ def reconstruct_all_folded(versions: DataFrame, emit: str = "all") -> DataFrame:
     ALL versions; the declarative form remains better for sparse target
     sets (it prunes to the governing epochs).
     """
-    import numpy as np
     import pandas as pd
 
     if emit not in ("all", "last"):
         raise ValueError(f"emit must be 'all' or 'last', got {emit!r}")
-    emit_all = emit == "all"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seq")
         content_id = pdf["content_id"].iloc[0]
-        out: dict[str, list] = {
-            k: []
-            for k in (
-                "content_id", "target_seq", "base_seq", "cost", "avg_magnitude",
-                "avg_sparsity", "deltas_applied", "embedding",
-            )
-        }
-
-        def emit_row(seq, base_seq, recon, mags, spars, applied):
-            out["content_id"].append(content_id)
-            out["target_seq"].append(seq)
-            out["base_seq"].append(base_seq)
-            out["cost"].append(len(applied))
-            out["avg_magnitude"].append(float(np.mean(mags)) if mags else None)
-            out["avg_sparsity"].append(float(np.mean(spars)) if spars else None)
-            out["deltas_applied"].append(list(applied))
-            out["embedding"].append(recon)
-
-        recon = None
-        base_seq = None
-        last_seq = None
-        mags: list[float] = []
-        spars: list[float] = []
-        applied: list[str] = []
-        for row in pdf.itertuples(index=False):
-            if row.kind == "base":
-                recon = np.asarray(row.embedding, dtype=np.float64).copy()
-                base_seq = int(row.seq)
-                mags, spars, applied = [], [], []
-            else:
-                if recon is None:
-                    continue  # delta before any base: not reconstructable
-                idx = np.asarray(row.sparse_idx, dtype=np.int64)
-                val = np.asarray(row.sparse_val, dtype=np.float64)
-                # reference quirk #9: indices >= dim are silently skipped
-                # (core/data_structures.py:117-119). Negative indices are
-                # ALSO dropped — a deliberate deviation from the reference,
-                # whose `if idx < len` check lets Python wrap them around;
-                # wrapping corrupt data is never intended, and dropping
-                # keeps this twin bit-equal to the declarative fold (whose
-                # map lookup only probes keys 0..dim-1). Pinned in tests.
-                ok = (idx >= 0) & (idx < recon.shape[0])
-                recon = recon.copy()
-                np.add.at(recon, idx[ok], val[ok])
-                mags.append(float(row.magnitude))
-                spars.append(float(row.n_changed) / float(row.total_dims))
-                applied.append(row.version_id)
-            last_seq = int(row.seq)
-            if emit_all:
-                emit_row(last_seq, base_seq, recon, mags, spars, applied)
-        if not emit_all and recon is not None:
-            emit_row(last_seq, base_seq, recon, mags, spars, applied)
+        recs = replay_timeline(pdf.sort_values("seq").itertuples(index=False), emit)
+        out = {"content_id": [content_id] * len(recs)}
+        out.update({k: [r[k] for r in recs] for k in REPLAY_COLUMNS})
         # a timeline with no reconstructable row (all deltas precede any
         # base) emits nothing — build the empty frame with object dtype,
         # else pandas defaults the columns to float64 and Arrow refuses
         # the float64→list<...> conversion for deltas_applied/embedding
-        if not out["content_id"]:
+        if not recs:
             return pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
         return pd.DataFrame(out)
 

@@ -66,12 +66,19 @@ def storage_efficiency(versions: DataFrame) -> DataFrame:
     )
 
 
-def reconstruction_statistics(versions: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG) -> DataFrame:
+def reconstruction_statistics(
+    versions: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG, materialize: bool = True
+) -> DataFrame:
     """A3 (``core/reconstruction_service.py:360-414``) over ALL sequences
     (the reference strides to ~10 samples, ``:375``): per-content cost /
-    base-distance / quality aggregates + promotion flag (max cost > 15)."""
+    base-distance / quality aggregates + promotion flag (max cost > 15).
+    ``materialize`` as in ``reconstruct_all``: False leaves no persisted
+    frame behind, for a one-timeline caller whose re-scans are cheap."""
     rec = with_quality_columns(
-        reconstruct_all(versions, with_embedding=False).drop("deltas_applied"), cfg
+        reconstruct_all(versions, materialize=materialize, with_embedding=False).drop(
+            "deltas_applied"
+        ),
+        cfg,
     )
     return rec.groupBy("content_id").agg(
         F.count("*").cast("int").alias("versions_analyzed"),
@@ -96,11 +103,13 @@ def database_statistics(versions: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG) -
     return storage_statistics(versions).crossJoin(global_r)
 
 
-def content_statistics(versions: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG) -> DataFrame:
+def content_statistics(
+    versions: DataFrame, cfg: TVDBConfig = DEFAULT_CONFIG, materialize: bool = True
+) -> DataFrame:
     """A5 (``storage/temporal_database.py:301-330``): A1 + A3 joined per
     content — one pass, struct-of-aggs."""
     return change_statistics(versions).join(
-        reconstruction_statistics(versions, cfg), "content_id", "left"
+        reconstruction_statistics(versions, cfg, materialize), "content_id", "left"
     )
 
 

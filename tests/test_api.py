@@ -234,3 +234,23 @@ def test_facade_retention_dryrun_verify_and_tiering(db, spark, tmp_path):
     tiers = db.storage_tiering(hot_days=2, warm_days=4).collect()
     assert sum(r.n_versions for r in tiers) == db.versions().count()
     assert sum(r.n_latest for r in tiers) == 2
+
+
+def test_rewrites_keep_the_sidecar(db, spark):
+    """compact() and truncate_before() overwrite the table directory; the
+    sidecar survives them: a reopened DB keeps its config and dimension,
+    and reads keep naming the recorded schema."""
+    import json
+    import os
+
+    db.add_versions(_raw(spark, contents=("a",), n=12))
+    before, schema = db._meta(), db.versions().schema
+    assert db.compact(max_cost=2) > 0
+    assert db.truncate_before(T0 + timedelta(days=3)) > 0
+    after = db._meta()
+    assert after.pop("schema") and before.pop("schema")
+    assert after == before and db.versions().schema == schema
+    reopened = TemporalVectorDatabase.open(spark, db.table_path)
+    assert reopened.cfg == CFG and reopened.embedding_dim == 16
+    with open(os.path.join(db.table_path, "_tvdb_meta.json")) as f:
+        assert json.load(f)["schema"]["fields"]

@@ -150,3 +150,24 @@ def test_storage_tiering_report_exact_buckets(spark):
 
     with _pytest.raises(ValueError, match="hot_days"):
         storage_tiering_report(v, hot_days=7, warm_days=7)
+
+
+def test_duplicate_seq_row_marks_timeline_invalid(versions):
+    """Fault injection: one content gains a second row at an existing
+    ``seq`` (two appends that continued from the same head). Integrity
+    reports that content invalid and leaves every other report row as it
+    was."""
+    clean = {r.content_id: r.asDict() for r in validate_timeline_integrity(versions).collect()}
+    assert clean["c00000"]["valid"]
+    dup = versions.where((F.col("content_id") == "c00000") & (F.col("seq") == 7))
+    assert dup.count() == 1
+    faulty = {
+        r.content_id: r.asDict()
+        for r in validate_timeline_integrity(versions.unionByName(dup)).collect()
+    }
+    assert faulty["c00000"]["valid"] is False
+    # the injected row is no gap and no dangling delta: only the flag moves
+    assert faulty["c00000"]["n_missing"] == 0 and faulty["c00000"]["n_dangling"] == 0
+    assert {c: r for c, r in faulty.items() if c != "c00000"} == {
+        c: r for c, r in clean.items() if c != "c00000"
+    }
